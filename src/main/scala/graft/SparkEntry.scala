@@ -3,7 +3,7 @@ package graft
 import graft.dedup.Dedup
 import graft.harmonize._
 import graft.multimodal.BinaryMeta
-import graft.operators.AsOfJoin
+import graft.operators.{AsOfJoin, Pins}
 import graft.similarity.Ann
 import graft.streaming.Events
 import graft.text.{Curate, TextOps}
@@ -897,7 +897,7 @@ object SparkEntry {
     servedIndexBuilt.computeIfAbsent(memoKey(t, key),
       _ => { build; java.lang.Boolean.TRUE })
 
-  private val capFramesCache = new java.util.concurrent.ConcurrentHashMap[
+  private[graft] val capFramesCache = new java.util.concurrent.ConcurrentHashMap[
     String, (DataFrame, DataFrame, DataFrame, DataFrame)]()
 
   private def capFrames(t: Tables): (DataFrame, DataFrame, DataFrame, DataFrame) =
@@ -1090,10 +1090,7 @@ object SparkEntry {
   }
 
   private def dedupComponents(t: Tables): DataFrame =
-    // releaseInput: components is the pair table's terminal consumer
-    // here, so it drops the materialized pair cache on completion
-    Dedup.components(jaccardPairsWired(t), releaseInput = true)
-      .orderBy("id")
+    Dedup.components(jaccardPairsWired(t)).orderBy("id")
 
   private def dedupComponentsDist(t: Tables): DataFrame =
     // the 100 TB clustering path ORACLE-GATED (r19): smallGraphLimit=0
@@ -1101,15 +1098,13 @@ object SparkEntry {
     // path (no driver residency) that big graphs take; same closure,
     // same oracle as dedup_components, so the two arms adjudicate
     // each other cross-engine
-    Dedup.components(jaccardPairsWired(t), releaseInput = true,
-      smallGraphLimit = 0)
+    Dedup.components(jaccardPairsWired(t), smallGraphLimit = 0)
       .orderBy("id")
 
   private def dedupCanonical(t: Tables): DataFrame =
     // the "write the clean corpus" step after near-dup clustering: one
     // canonical (min-id) document per cluster plus every unpaired doc
-    Dedup.keepCanonical(t.documents, "doc_id", jaccardPairsWired(t),
-      releaseInput = true)
+    Dedup.keepCanonical(t.documents, "doc_id", jaccardPairsWired(t))
       .select(F.col("doc_id"), F.col("lang"))
       .orderBy("doc_id")
 
@@ -1119,8 +1114,7 @@ object SparkEntry {
     // maps to its survivor so the output is the corpus rewrite table
     Dedup.keepBest(t.documents, "doc_id", jaccardPairsWired(t),
       t.documents.select(F.col("doc_id").as("id"),
-        F.size(TextOps.tokens(F.col("text"))).as("score")),
-      releaseInput = true)
+        F.size(TextOps.tokens(F.col("text"))).as("score")))
       .select(F.col("id").as("doc_id"), F.col("kept_id"))
       .orderBy("doc_id")
 
@@ -2631,7 +2625,7 @@ object SparkEntry {
     * (process, sf dir); payloads are small by construction (16-48 px
     * rasters, 4-px video columns). Decode + hash stay fully measured.
     */
-  private val fixtureCorpusCache =
+  private[graft] val fixtureCorpusCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   private def fixtureCorpus(t: Tables, tag: String)
@@ -2967,8 +2961,7 @@ object SparkEntry {
     // pipeline), so near-duplicates never straddle splits — the
     // eval-contamination guard a naive per-doc random split lacks
     Curate.leakageFreeSplit(t.documents, "doc_id", jaccardPairsWired(t),
-        Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05),
-        releaseInput = true)
+        Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05))
       .select(F.col("doc_id"), F.col("group_id").cast("long").as("group_id"),
         F.col("split"))
       .orderBy("doc_id")
@@ -3066,21 +3059,12 @@ object SparkEntry {
     * n_nationkey, ...) plus the non-inclusions that prove direction.
     */
   private def indCandidates(t: Tables): Seq[(String, DataFrame, String)] = {
-    // call-site spread (r21, guide §2.5 — the profile_numeric
-    // treatment): orders/lineitem are UNSPREAD at load, so both the
-    // exact side's explode+distinct map work and the sketch side's
-    // per-frame KMV/HLL aggregates ran in ONE task per table
-    // (measured: 1-3-task stages of 1.2-2.5 s summed task time inside
-    // profile_inclusion_sketch). PROJECT to the candidate key columns
-    // BEFORE the spread exchange (guide §2.3): a first version spread
-    // the full-width tables and the exchange carried every column —
-    // 81 MB shuffled where the discovery only reads the keys (~16 MB)
-    // — measured as a net regression (7.2 → 7.4 s) before the
-    // projection, a win after it. Spread ONCE per table here — the
-    // frames are grouped by reference identity in groupByFrame, so
-    // each table still scans once.
-    val orders = t.orders
-    val lineitem = t.lineitem
+    // orders/lineitem are UNSPREAD at load; the spread (projected to
+    // the candidate key columns first) happens in Discovery's sketch
+    // pass, once per source frame — groupByFrame groups these triples
+    // by frame reference identity, so each table scans once. Do not
+    // spread here too: the exact side's distinct works best on the raw
+    // clustered layout.
     Seq(
       ("nation.n_nationkey", t.nation, "n_nationkey"),
       ("nation.n_regionkey", t.nation, "n_regionkey"),
@@ -3090,11 +3074,11 @@ object SparkEntry {
       ("supplier.s_suppkey", t.supplier, "s_suppkey"),
       ("supplier.s_nationkey", t.supplier, "s_nationkey"),
       ("part.p_partkey", t.part, "p_partkey"),
-      ("orders.o_orderkey", orders, "o_orderkey"),
-      ("orders.o_custkey", orders, "o_custkey"),
-      ("lineitem.l_orderkey", lineitem, "l_orderkey"),
-      ("lineitem.l_partkey", lineitem, "l_partkey"),
-      ("lineitem.l_suppkey", lineitem, "l_suppkey"))
+      ("orders.o_orderkey", t.orders, "o_orderkey"),
+      ("orders.o_custkey", t.orders, "o_custkey"),
+      ("lineitem.l_orderkey", t.lineitem, "l_orderkey"),
+      ("lineitem.l_partkey", t.lineitem, "l_partkey"),
+      ("lineitem.l_suppkey", t.lineitem, "l_suppkey"))
   }
 
   private def profileInclusion(t: Tables): DataFrame =
@@ -3315,81 +3299,54 @@ object SparkEntry {
     operators.Graph.degreeDistribution(shipmentEdges(t))
       .orderBy("side", "degree")
 
-  private def graphTriangles(t: Tables): DataFrame = {
-    // co-order part graph: parts appearing in the same order, kept at
-    // co-occurrence >= 2 (the support filter that bounds the 2-path
-    // join's deg² blowup before triangle closure)
-    // persisted: both sides of the pair-building self-join read this
-    // distinct — unpinned, the corpus scan + distinct shuffle run twice
-    val op = t.lineitem.select(F.col("l_orderkey").as("ok"),
-      F.col("l_partkey").as("pk")).distinct().persist()
-    val pairs = op.as("x").join(op.as("y"),
+  /** The co-order part graph the graph queries share: parts appearing
+    * in the same order, one (a < b, cooc) row per part pair, kept at
+    * co-occurrence >= minCooc (the support filter that bounds the
+    * 2-path join's deg² blowup). The (order, part) distinct is
+    * persisted: both sides of the pair-building self-join read it —
+    * unpinned, the corpus scan + distinct shuffle run twice.
+    */
+  private def coOrderPairs(t: Tables, minCooc: Int): DataFrame = {
+    val op = Pins.persist(t.lineitem.select(F.col("l_orderkey").as("ok"),
+      F.col("l_partkey").as("pk")).distinct())
+    op.as("x").join(op.as("y"),
         F.col("x.ok") === F.col("y.ok") && F.col("x.pk") < F.col("y.pk"))
       .groupBy(F.col("x.pk").as("a"), F.col("y.pk").as("b"))
       .agg(F.count(F.lit(1)).as("cooc"))
-      .where(F.col("cooc") >= 2)
-      .select("a", "b")
-    operators.Graph.triangleParticipation(pairs)
-      .orderBy(F.col("n_triangles").desc, F.col("node").asc)
-      .limit(20)
+      .where(F.col("cooc") >= minCooc)
   }
 
-  private def graphClustering(t: Tables): DataFrame = {
+  private def graphTriangles(t: Tables): DataFrame =
+    // support >= 2 before triangle closure
+    operators.Graph.triangleParticipation(coOrderPairs(t, 2).select("a", "b"))
+      .orderBy(F.col("n_triangles").desc, F.col("node").asc)
+      .limit(20)
+
+  private def graphClustering(t: Tables): DataFrame =
     // local clustering coefficients over the SAME co-order graph as
     // graph_triangles (support >= 2) — gated on (lcc desc, deg desc,
     // node) so high-cohesion neighborhoods surface, not just hubs
-    val op = t.lineitem.select(F.col("l_orderkey").as("ok"),
-      F.col("l_partkey").as("pk")).distinct().persist()
-    val pairs = op.as("x").join(op.as("y"),
-        F.col("x.ok") === F.col("y.ok") && F.col("x.pk") < F.col("y.pk"))
-      .groupBy(F.col("x.pk").as("a"), F.col("y.pk").as("b"))
-      .agg(F.count(F.lit(1)).as("cooc"))
-      .where(F.col("cooc") >= 2)
-      .select("a", "b")
-    operators.Graph.clusteringCoefficient(pairs)
+    operators.Graph.clusteringCoefficient(coOrderPairs(t, 2).select("a", "b"))
       .orderBy(F.col("lcc_ppm").desc, F.col("deg").desc, F.col("node").asc)
       .limit(20)
-  }
 
-  private def graphComponents(t: Tables): DataFrame = {
+  private def graphComponents(t: Tables): DataFrame =
     // generic connected components over the co-order part graph
     // (parts appearing together in >= 3 orders — the support filter
     // keeps the pair self-join's deg² bounded AND the oracle's
     // transitive closure component-sized): min-reachable-id labels
     // via the dedup clusterer's id-generic machinery exposed on Graph
-    val op = t.lineitem.select(F.col("l_orderkey").as("ok"),
-      F.col("l_partkey").as("pk")).distinct().persist()
-    val pairs = op.as("x").join(op.as("y"),
-        F.col("x.ok") === F.col("y.ok") && F.col("x.pk") < F.col("y.pk"))
-      .groupBy(F.col("x.pk").as("a"), F.col("y.pk").as("b"))
-      .agg(F.count(F.lit(1)).as("cooc"))
-      .where(F.col("cooc") >= 3)
-      .select("a", "b")
-    val out = operators.Graph.connectedComponents(pairs).orderBy("id")
-    op.unpersist()
-    out
-  }
+    operators.Graph.connectedComponents(coOrderPairs(t, 3).select("a", "b"))
+      .orderBy("id")
 
-  private def graphCommunities(t: Tables): DataFrame = {
+  private def graphCommunities(t: Tables): DataFrame =
     // community detection over the co-order part graph (support >= 2
     // keeps a rich community structure — ~300 communities at sf0.01):
     // 5 synchronous deterministic label-propagation rounds; the twin
     // replays the same rounds unrolled
-    val op = t.lineitem.select(F.col("l_orderkey").as("ok"),
-      F.col("l_partkey").as("pk")).distinct().persist()
-    val pairs = op.as("x").join(op.as("y"),
-        F.col("x.ok") === F.col("y.ok") && F.col("x.pk") < F.col("y.pk"))
-      .groupBy(F.col("x.pk").as("a"), F.col("y.pk").as("b"))
-      .agg(F.count(F.lit(1)).as("cooc"))
-      .where(F.col("cooc") >= 2)
-      .select("a", "b")
-    // materialized by labelPropagation's first pinned round, so the
-    // support frame can release before the (lazy) output is consumed
-    val out = operators.Graph.labelPropagation(pairs, iters = 5)
+    operators.Graph.labelPropagation(coOrderPairs(t, 2).select("a", "b"),
+        iters = 5)
       .orderBy("node")
-    op.unpersist()
-    out
-  }
 
   // -------------------------------------------- round-14b ops
 
@@ -3414,22 +3371,11 @@ object SparkEntry {
     // graph (support >= 2), 4 bounded rounds — hop histograms are
     // rich at every SF (0..2 at sf0.001, 0..4 at sf0.01/0.1);
     // isolated seeds report hop 0 by the seeds-included contract
-    val op = t.lineitem.select(F.col("l_orderkey").as("ok"),
-      F.col("l_partkey").as("pk")).distinct().persist()
-    val pairs = op.as("x").join(op.as("y"),
-        F.col("x.ok") === F.col("y.ok") && F.col("x.pk") < F.col("y.pk"))
-      .groupBy(F.col("x.pk").as("a"), F.col("y.pk").as("b"))
-      .agg(F.count(F.lit(1)).as("cooc"))
-      .where(F.col("cooc") >= 2)
-      .select("a", "b")
     val seeds = t.part.where(F.col("p_brand") === "Brand#1")
       .select(F.col("p_partkey").as("node"))
-    // materialized by shortestHops' first pinned round, so the
-    // support frame can release before the (lazy) output is consumed
-    val out = operators.Graph.shortestHops(pairs, seeds, rounds = 4)
+    operators.Graph.shortestHops(coOrderPairs(t, 2).select("a", "b"), seeds,
+        rounds = 4)
       .orderBy("node")
-    op.unpersist()
-    out
   }
 
   private def graphLinkpred(t: Tables): DataFrame = {
@@ -3480,20 +3426,11 @@ object SparkEntry {
     // brand seed set keeps |S| the explicit cost knob while reaching
     // 10x the surface); 4 rounds, contributions lcm(1..4)=12-scaled
     // so every reciprocal is an exact integer
-    val op = t.lineitem.select(F.col("l_orderkey").as("ok"),
-      F.col("l_partkey").as("pk")).distinct().persist()
-    val pairs = op.as("x").join(op.as("y"),
-        F.col("x.ok") === F.col("y.ok") && F.col("x.pk") < F.col("y.pk"))
-      .groupBy(F.col("x.pk").as("a"), F.col("y.pk").as("b"))
-      .agg(F.count(F.lit(1)).as("cooc"))
-      .where(F.col("cooc") >= 2)
-      .select("a", "b")
     val seeds = t.part.where(F.col("p_brand") === "Brand#1")
       .select(F.col("p_partkey").as("node"))
-    val out = operators.Graph.harmonicCentrality(pairs, seeds, rounds = 4)
+    operators.Graph.harmonicCentrality(coOrderPairs(t, 2).select("a", "b"), seeds,
+        rounds = 4)
       .orderBy("node")
-    op.unpersist()
-    out
   }
 
   private def intervalJoin(t: Tables): DataFrame =
@@ -3540,21 +3477,12 @@ object SparkEntry {
     // ceil(12/cooc) makes strong co-order links short — a Bellman-Ford
     // min-plus over the same graph/seeds/rounds as graph_bfs, exact
     // integer costs
-    val op = t.lineitem.select(F.col("l_orderkey").as("ok"),
-      F.col("l_partkey").as("pk")).distinct().persist()
-    val pairs = op.as("x").join(op.as("y"),
-        F.col("x.ok") === F.col("y.ok") && F.col("x.pk") < F.col("y.pk"))
-      .groupBy(F.col("x.pk").as("a"), F.col("y.pk").as("b"))
-      .agg(F.count(F.lit(1)).as("cooc"))
-      .where(F.col("cooc") >= 2)
-      .select(F.col("a"), F.col("b"),
-        F.ceil(F.lit(12) / F.col("cooc")).as("cost"))
+    val pairs = coOrderPairs(t, 2).select(F.col("a"), F.col("b"),
+      F.ceil(F.lit(12) / F.col("cooc")).as("cost"))
     val seeds = t.part.where(F.col("p_brand") === "Brand#1")
       .select(F.col("p_partkey").as("node"))
-    val out = operators.Graph.shortestPaths(pairs, seeds, rounds = 4)
+    operators.Graph.shortestPaths(pairs, seeds, rounds = 4)
       .orderBy("node")
-    op.unpersist()
-    out
   }
 
   private def erResolve(t: Tables): DataFrame = {
@@ -3961,24 +3889,13 @@ object SparkEntry {
   private def graphModularity(t: Tables): DataFrame = {
     // score the label-propagation communities: per-community
     // Q-numerators (q_num = 4m*intra - d^2, so sum(q_num) = Q*4m^2) —
-    // exact integers, no division anywhere
-    val op = t.lineitem.select(F.col("l_orderkey").as("ok"),
-      F.col("l_partkey").as("pk")).distinct().persist()
-    val pairs = op.as("x").join(op.as("y"),
-        F.col("x.ok") === F.col("y.ok") && F.col("x.pk") < F.col("y.pk"))
-      .groupBy(F.col("x.pk").as("a"), F.col("y.pk").as("b"))
-      .agg(F.count(F.lit(1)).as("cooc"))
-      .where(F.col("cooc") >= 2)
-      .select("a", "b")
-      .persist()
+    // exact integers, no division anywhere. The pair table feeds both
+    // labelPropagation and the modularity report, so it is persisted.
+    val pairs = Pins.persist(coOrderPairs(t, 2).select("a", "b"))
     val labels = operators.Graph.labelPropagation(pairs, iters = 5)
-    // pin the (small) report eagerly so the support frames can
-    // release before the caller consumes the lazy output
-    val out = operators.Graph.modularity(pairs, labels)
-      .orderBy("community")
-      .localCheckpoint(true)
-    pairs.unpersist(); op.unpersist()
-    out
+    // pin the (small) report eagerly: the lazy output then reads one
+    // leaf, not the support frames' plans
+    Pins.pin(operators.Graph.modularity(pairs, labels).orderBy("community"))
   }
 
   // -------------------------------------------- pipeline ops (r13b)

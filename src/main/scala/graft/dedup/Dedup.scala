@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.operators.Pins
 import graft.text.TextOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -65,8 +66,9 @@ object Dedup {
     * instead of re-running the pipeline). ONE eager action runs here:
     * the shingle table's cache fills as the single candidate+verify job
     * computes, so no intermediate count jobs pay scheduler passes.
-    * Callers that are fully done with the result should unpersist() it
-    * (components() does so via releaseInput).
+    * The result and the candidate prefix table stay cached for the
+    * caller; inside [[graft.operators.Pins.scoped]] both are released
+    * when the scope exits.
     */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
                    k: Int, threshold: Double,
@@ -76,11 +78,10 @@ object Dedup {
     // per-doc set table feeds everything downstream — the exploded
     // (id, sh) pairs and the doc sizes for candidate generation, and
     // the sorted arrays for merge-scan verification
-    val sets = docShingleSets(df, idCol, textCol, k).persist()
-    val (cands, releasePrefix) = candidatesFromSets(sets, threshold, dfCap, hotSalt)
-    val out = verifyJaccard(cands, sets, threshold).persist()
+    val sets = Pins.persist(docShingleSets(df, idCol, textCol, k))
+    val cands = candidatesFromSets(sets, threshold, dfCap, hotSalt)
+    val out = Pins.persist(verifyJaccard(cands, sets, threshold))
     out.count() // the ONLY materializing action: candidates + verify, one job
-    releasePrefix()
     sets.unpersist()
     out
   }
@@ -96,11 +97,9 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       k: Int, threshold: Double, dfCap: Option[Long] = None,
       hotSalt: Option[(Long, Int)] = None): DataFrame = {
-    val sets = docShingleSets(df, idCol, textCol, k).persist()
-    val (cands0, releasePrefix) = candidatesFromSets(sets, threshold, dfCap, hotSalt)
-    val cands = cands0.persist()
+    val sets = Pins.persist(docShingleSets(df, idCol, textCol, k))
+    val cands = Pins.persist(candidatesFromSets(sets, threshold, dfCap, hotSalt))
     cands.count() // materialize while the set table is cached, then drop it
-    releasePrefix()
     sets.unpersist()
     cands
   }
@@ -113,8 +112,7 @@ object Dedup {
     */
   private def candidatesFromSets(sets: DataFrame, threshold: Double,
                                  dfCap: Option[Long],
-                                 hotSalt: Option[(Long, Int)] = None):
-      (DataFrame, () => Unit) = {
+                                 hotSalt: Option[(Long, Int)] = None): DataFrame = {
     val tok = sets.select(F.col("id"), F.explode(F.col("shs")).as("sh"))
     val sizes = sets.select(F.col("id"), F.col("sz"))
     val dfreq = tok.groupBy("sh").agg(F.count(F.lit(1)).as("df"))
@@ -131,10 +129,11 @@ object Dedup {
     // were ~45 s of the 100 s task time behind dedup_components_dist).
     // One cache entry of (id, sh, df) prefix rows — a fraction of the
     // shingle table by the prefix theorem — replaces three re-runs;
-    // the caller releases it right after its materializing action.
-    val prefix = dfCap.fold(prefix0)(cap => prefix0.where(F.col("df") <= cap))
-      .select("id", "sh", "df")
-      .persist()
+    // it stays cached for the caller's materializing action (the
+    // enclosing Pins.scoped releases it).
+    val prefix = Pins.persist(
+      dfCap.fold(prefix0)(cap => prefix0.where(F.col("df") <= cap))
+        .select("id", "sh", "df"))
     def candJoin(p: DataFrame): DataFrame =
       p.as("a").join(p.as("b"), Seq("sh"))
         .where(F.col("a.id") < F.col("b.id"))
@@ -160,7 +159,7 @@ object Dedup {
           .select("id1", "id2")
         candJoin(cold).unionAll(hotPairs)
     }
-    (cands.distinct(), () => { prefix.unpersist(); () })
+    cands.distinct()
   }
 
   /** Per-doc sorted shingle-hash set (id, shs, sz) — built per row
@@ -222,28 +221,16 @@ object Dedup {
   }
 
   def components(pairs: DataFrame, maxIter: Int = 20,
-                 releaseInput: Boolean = false,
                  smallGraphLimit: Long = SmallGraphEdges): DataFrame = {
-    // persist the pair input: it feeds the size probe plus every
-    // propagation round (or the union-find collect) — without this, an
-    // expensive upstream pipeline (e.g. jaccardPairs) would rerun per
-    // use. An input that arrives ALREADY persisted (jaccardPairs'
-    // materialized pair table) is not re-persisted — double caching
-    // stores the same rows twice and was the "asked to cache already
-    // cached data" churn in the round-2 bench.
-    val inputCached =
-      pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val pre = pairs.select(F.col("id1"), F.col("id2"))
-    val p = if (inputCached) pre else pre.persist()
-    // releaseInput: the output never references the input plan (the
-    // union-find rows are driver-built; the distributed labels are
-    // their own cached frame), so a terminal consumer can ask this
-    // operator — the pipeline boundary — to drop the input's cache.
-    def done[A](out: A): A = {
-      if (!inputCached) p.unpersist()
-      if (releaseInput && inputCached) pairs.unpersist()
-      out
-    }
+    // persist the (id1, id2) projection: it feeds the size probe plus
+    // every propagation round (or the union-find collect) — without
+    // this, an expensive upstream pipeline (e.g. jaccardPairs) would
+    // rerun per use. The projection is this call's own frame (a cached
+    // input is read through it), so it is released before returning:
+    // the output never references it (the union-find rows are
+    // driver-built; the distributed labels are their own pinned frame).
+    val p = Pins.persist(pairs.select(F.col("id1"), F.col("id2")))
+    def done[A](out: A): A = { p.unpersist(); out }
     val nPairs = p.count()
     // size probe doubles as the materializing action; undirected edge
     // count is at most 2x the pair count
@@ -261,7 +248,7 @@ object Dedup {
     // parallelism-many near-empty task launches per round, a huge
     // graph still splits at ~1M rows/task
     val par = p.sparkSession.sparkContext.defaultParallelism
-    val pE = graft.operators.Pins.partsForRows(2 * nPairs, par)
+    val pE = Pins.partsForRows(2 * nPairs, par)
     // PINNED, not persisted (r20): a persisted edge frame keeps the
     // caller's ENTIRE pair-pipeline lineage in its logical plan, and
     // every round's action (cache fill + convergence probe + broadcast
@@ -276,7 +263,7 @@ object Dedup {
     // partitioning and every round's groupBy(a) runs exchange-free;
     // at the large end (labels not broadcast) the join re-shuffles
     // either way, so nothing is lost.
-    val edges = graft.operators.Pins.pin(
+    val edges = Pins.pin(
       p.select(F.col("id1").as("a"), F.col("id2").as("b"))
         .unionAll(p.select(F.col("id2").as("a"), F.col("id1").as("b")))
         .repartition(pE, F.col("a")))
@@ -287,13 +274,12 @@ object Dedup {
     // |labels| ≤ 2·nPairs bounds the broadcast decision by a measured
     // scalar, and big graphs fall back to the planner's choice
     def small(df: DataFrame): DataFrame =
-      if (2 * nPairs <= graft.operators.Pins.BroadcastRows) F.broadcast(df)
+      if (2 * nPairs <= Pins.BroadcastRows) F.broadcast(df)
       else df
     // cached: round 1 references the label frame on three join sides;
     // uncached, each side re-runs the node-distinct
-    var labels = edges.select(F.col("a").as("id")).distinct()
-      .select(F.col("id"), F.col("id").as("component"))
-      .cache()
+    var labels = Pins.persist(edges.select(F.col("a").as("id")).distinct()
+      .select(F.col("id"), F.col("id").as("component")))
     // the handle unpersist() must be called on: `labels` becomes a
     // PROJECTION over the round's cached frame below, and unpersisting
     // a projection does not release the underlying cache entry
@@ -323,13 +309,12 @@ object Dedup {
       // next ⋈ labels stage per round (the tiny-stage fixed costs are
       // the whole round cost at the low end; at scale the saved
       // shuffle is label-table-sized)
-      val next = relabeled.as("x")
+      val next = Pins.persist(relabeled.as("x")
         .join(small(relabeled.select(F.col("id").as("cid"),
             F.col("component").as("cc")).as("y")),
           F.col("x.component") === F.col("y.cid"), "left")
         .select(F.col("x.id").as("id"), F.col("x.prev").as("prev"),
-          F.coalesce(F.col("y.cc"), F.col("x.component")).as("component"))
-        .cache()
+          F.coalesce(F.col("y.cc"), F.col("x.component")).as("component")))
       val changed = next.where(F.col("component") =!= F.col("prev"))
         .limit(1).count()
       // next is materialized by the count above; previous round's cache
@@ -351,19 +336,13 @@ object Dedup {
           "(some nodes not yet at their component's min label)")
     // The loop's final labels frame is cached, but its LINEAGE still
     // walks through edges (unpersisted next line) and the caller's
-    // pair pipeline (dropped when releaseInput) — an executor loss
+    // pair pipeline (possibly released by then) — an executor loss
     // would silently re-run the entire upstream near-dup pipeline to
-    // rebuild evicted label partitions. Truncate the lineage before
-    // releasing the supports: a reliable checkpoint when the session
-    // has a checkpoint dir (the cluster deployment), else an eager
-    // localCheckpoint (single-JVM runs, where losing an executor
-    // means losing the app anyway).
-    val pinned =
-      if (labels.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        labels.checkpoint()
-      else labels.localCheckpoint(true)
+    // rebuild evicted label partitions. Pin (truncate the lineage)
+    // before releasing the supports.
+    val pinned = Pins.pin(labels)
     cached.unpersist()
-    graft.operators.Pins.release(edges)
+    Pins.release(edges)
     done(pinned)
   }
 
@@ -408,10 +387,8 @@ object Dedup {
     * that appears in no near-dup pair.
     */
   def keepCanonical(df: DataFrame, idCol: String, pairs: DataFrame,
-                    releaseInput: Boolean = false,
                     smallGraphLimit: Long = SmallGraphEdges): DataFrame = {
-    val comp = components(pairs, releaseInput = releaseInput,
-      smallGraphLimit = smallGraphLimit)
+    val comp = components(pairs, smallGraphLimit = smallGraphLimit)
     val losers = comp.where(F.col("id") =!= F.col("component"))
       .select(F.col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
@@ -433,10 +410,9 @@ object Dedup {
     * one (id, score) row per document; only paired ids are read.
     */
   def keepBest(df: DataFrame, idCol: String, pairs: DataFrame,
-               scored: DataFrame, releaseInput: Boolean = false,
+               scored: DataFrame,
                smallGraphLimit: Long = SmallGraphEdges): DataFrame = {
-    val comp = components(pairs, releaseInput = releaseInput,
-      smallGraphLimit = smallGraphLimit)
+    val comp = components(pairs, smallGraphLimit = smallGraphLimit)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("component")
       .orderBy(F.col("score").desc, F.col("id").asc)
@@ -743,18 +719,18 @@ object Dedup {
     // the batch signature table feeds both the probe side and the
     // union — persisted across the single materializing action below
     val batchBanded =
-      minhashBanded(incoming, idCol, textCol, k, numHashes, bands).persist()
+      Pins.persist(minhashBanded(incoming, idCol, textCol, k, numHashes, bands))
     val allBanded = existingBanded.select("id", "band", "key").unionAll(batchBanded)
     // persisted: the candidate table feeds the final verify join AND
     // the candIds semi-join, which Catalyst pushes through BOTH corpus
     // union branches — unpersisted, the band-join + distinct pipeline
     // would run three times per batch (seen in the executed plan)
-    val cands = batchBanded.as("a").join(allBanded.as("b"), Seq("band", "key"))
-      .where(F.col("a.id") =!= F.col("b.id"))
-      .select(F.least(F.col("a.id"), F.col("b.id")).as("id1"),
-        F.greatest(F.col("a.id"), F.col("b.id")).as("id2"))
-      .distinct()
-      .persist()
+    val cands = Pins.persist(
+      batchBanded.as("a").join(allBanded.as("b"), Seq("band", "key"))
+        .where(F.col("a.id") =!= F.col("b.id"))
+        .select(F.least(F.col("a.id"), F.col("b.id")).as("id1"),
+          F.greatest(F.col("a.id"), F.col("b.id")).as("id2"))
+        .distinct())
     val corpus = existing.select(F.col(idCol), F.col(textCol))
       .unionAll(incoming.select(F.col(idCol), F.col(textCol)))
     val candIds = cands
@@ -766,8 +742,8 @@ object Dedup {
     // rows through the verify join
     val candDocs = corpus.join(candIds, F.col(idCol) === F.col("__cid"), "left_semi")
       .dropDuplicates(idCol)
-    val out = verifyJaccard(cands,
-      docShingleSets(candDocs, idCol, textCol, k), threshold).persist()
+    val out = Pins.persist(verifyJaccard(cands,
+      docShingleSets(candDocs, idCol, textCol, k), threshold))
     out.count()
     batchBanded.unpersist()
     cands.unpersist()
@@ -834,8 +810,8 @@ object Dedup {
         // counting, the pruning anti-join, and the candidate self-join),
         // so it is persisted across ONE eager materializing action —
         // jaccardPairs' pattern: the verified output is what stays
-        // cached (small near-dup pair set, caller may unpersist), the
-        // signature pipeline cache is dropped here.
+        // cached (small near-dup pair set, freed by the caller's
+        // scope), the signature pipeline cache is dropped here.
         // Prune against the OVER-cap bucket set, not the under-cap one:
         // over-cap buckets are heavy-hitter-few by construction — the
         // under-cap complement is the whole bucket universe
@@ -846,7 +822,7 @@ object Dedup {
         // OOM the driver through a hint that bypasses
         // autoBroadcastJoinThreshold. AQE sees the aggregate's actual
         // runtime size and picks broadcast exactly when it is safe.
-        val banded = bandedAll.persist()
+        val banded = Pins.persist(bandedAll)
         val over = banded.groupBy("band", "key")
           .agg(F.count(F.lit(1)).as("bn")).where(F.col("bn") > cap)
           .select("band", "key")
@@ -855,8 +831,8 @@ object Dedup {
           .where(F.col("a.id") < F.col("b.id"))
           .select(F.col("a.id").as("id1"), F.col("b.id").as("id2"))
           .distinct()
-        val out = verifyJaccard(cands, docShingleSets(df, idCol, textCol, k),
-          threshold).persist()
+        val out = Pins.persist(verifyJaccard(cands,
+          docShingleSets(df, idCol, textCol, k), threshold))
         out.count()
         banded.unpersist()
         out

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** Distribution-drift statistics between two table snapshots — the
   * monitoring layer a long-lived 100 TB ingest pipeline runs between
@@ -85,9 +84,9 @@ object Drift {
     }.reduce(_ unionAll _).where(F.col("__v").isNotNull)
     val perValue = tagged.groupBy("__cmp", "__v")
       .agg(F.sum("__ia").as("ca"), F.sum("__ib").as("cb"))
-    val stamped = perValue.repartitionByRange(p0, F.col("__cmp"), F.col("__v"))
-      .sortWithinPartitions("__cmp", "__v")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val stamped = graft.operators.Pins.persist(
+      perValue.repartitionByRange(p0, F.col("__cmp"), F.col("__v"))
+        .sortWithinPartitions("__cmp", "__v"))
     // pass 1: per-(partition, comparison) totals (<= p*k rows after
     // partial agg) -> driver prefix sums per comparison. Grouping on
     // spark_partition_id projected first (nondeterministic

@@ -113,11 +113,6 @@ object SchemaMatcher {
       .where(F.col("rank") <= k)
   }
 
-  def valueOverlapTopK(
-      src: DataFrame, srcCols: Seq[String],
-      tgt: DataFrame, tgtCols: Seq[String], k: Int): DataFrame =
-    topKPerSource(valueOverlapAll(src, srcCols, tgt, tgtCols), k)
-
   /** Sketch-based distribution matching — the 100 TB scale path for
     * valueOverlapMatch: each column is reduced map-side to one MinHash
     * signature of its distinct values (graft.functions.MinHashAgg), and
@@ -211,14 +206,6 @@ object SchemaMatcher {
         F.round(graft.functions.HashExprs.cosineSim(F.col("vec"), F.col("tvec")), 6)
           .as("similarity"))
   }
-
-  def encoderProfileMatch(
-      src: DataFrame, srcCols: Seq[String],
-      tgt: DataFrame, tgtCols: Seq[String],
-      encoder: TextEncoder,
-      valueCap: Int = 1000, batchSize: Int = 256): DataFrame =
-    bestPerSource(encoderProfileAll(src, srcCols, tgt, tgtCols, encoder,
-      valueCap, batchSize))
 
   /** All (source, target) column-name pairs with normalized edit
     * similarity — names are driver-small, so this is a tiny broadcast

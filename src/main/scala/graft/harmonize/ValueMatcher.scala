@@ -247,11 +247,10 @@ object ValueMatcher {
     // are persisted so the guard's eager pass (join + window per
     // side) is the SAME work the candidate join reuses — the guard
     // costs one extra counts-only aggregate, not a second window
-    // pass; ContextCleaner reclaims the blocks once the plan is GC'd.
-    val sigA = signature(ga)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigB = signature(gb)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // pass; they stay cached for the lazy result (the caller's
+    // Pins.scoped frees them).
+    val sigA = graft.operators.Pins.persist(signature(ga))
+    val sigB = graft.operators.Pins.persist(signature(gb))
     val dec = "decimal(38,0)"
     val fanLong = sigA.agg(
         F.coalesce(F.sum(F.col("__nb").cast(dec)), F.lit(0).cast(dec)).as("f"))

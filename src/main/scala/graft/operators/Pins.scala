@@ -1,21 +1,40 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
-/** Lineage pinning for iterative loops — one shared implementation of
-  * the per-round checkpoint/localCheckpoint pattern (the pageRank
-  * plan-explosion fix) PLUS its missing half: deterministic release.
+/** The one place graft stores intermediate frames, and the one place
+  * it releases them.
   *
-  * `Dataset.unpersist()` only clears CacheManager entries (frames
-  * pinned via `persist()`); an eager `localCheckpoint` parks its
-  * MEMORY_AND_DISK blocks behind a `LogicalRDD` leaf that the
-  * CacheManager never sees, so per-round `unpersist()` calls in a loop
-  * are silent no-ops and every round's blocks linger until the
-  * ContextCleaner happens to GC the RDD object — which a tight
-  * iterative loop (5-8 rounds before any GC) easily outruns. At
-  * cluster scale that is `rounds × |frontier|` of dead blocks
-  * competing with the live working set.
+  * Every persist in the library goes through [[persist]] and every
+  * lineage truncation through [[pin]]. Both register what they create
+  * in the innermost [[scoped]] block on the calling thread; threads
+  * started inside a scope inherit it. When the block exits, normally
+  * or by an exception, the scope releases everything registered in
+  * it, blocking, so a long-lived session that wraps each unit of work
+  * in `Pins.scoped { ... }` accumulates no cached or checkpointed
+  * blocks:
+  *
+  * {{{
+  *   val nDocs = Pins.scoped {
+  *     Dedup.keepCanonical(docs, "doc_id", Dedup.jaccardPairs(...))
+  *       .write.parquet(out)
+  *     spark.read.parquet(out).count()
+  *   }
+  * }}}
+  *
+  * Outside a scope nothing is registered: [[persist]] and [[pin]]
+  * behave like the plain Spark calls, and whatever an operator leaves
+  * cached stays cached until the caller clears it. Operators still
+  * release the intermediates they create and fully consume before
+  * returning; a scope additionally covers what they return or leave
+  * cached for the result's consumer.
+  *
+  * Release is precise: a persisted frame is dropped from the
+  * CacheManager, a pinned frame's own checkpoint RDD is unpersisted.
+  * Frames the scope did not create, including pins further up a
+  * registered frame's lineage, are never touched.
   */
 object Pins {
 
@@ -50,17 +69,51 @@ object Pins {
     */
   val BroadcastRows: Long = 1L << 20
 
+  /** Run `body` and release, blocking, every frame [[persist]] or
+    * [[pin]] created inside it, on this thread or on threads started
+    * inside it. Release runs in `finally`, so it also runs when the
+    * body throws. Scopes nest; a frame registers with the innermost.
+    * The body must return a materialized value (a count, collected
+    * rows, Unit after a write): a returned Dataset would be a plan
+    * over blocks the scope is about to free.
+    */
+  def scoped[A](body: => A): A = {
+    val scope = new Scope
+    val outer = scopes.get
+    scopes.set(scope :: outer)
+    try {
+      val out = body
+      require(!out.isInstanceOf[Dataset[_]],
+        "Pins.scoped: the body returned a Dataset, whose blocks the scope " +
+          "releases on exit — return a materialized value (count, collect, write)")
+      out
+    } finally {
+      scopes.set(outer)
+      scope.close()
+    }
+  }
+
+  /** Persist `df` at the session's default cache level (MEMORY_AND_DISK
+    * unless configured otherwise) and register it with the enclosing
+    * scope. A frame that is already cached is returned unchanged and
+    * not registered: its owner releases it.
+    */
+  def persist(df: DataFrame): DataFrame =
+    if (df.storageLevel != StorageLevel.NONE) df
+    else register(df.persist())
+
   /** Eager lineage pin: a reliable checkpoint when the session has a
     * checkpoint dir (cluster deployments — survives executor loss),
     * else an eager localCheckpoint (single-JVM runs, where losing an
     * executor means losing the app anyway). Plain persist() is NOT
     * enough for a frame referenced more than once per round: the
     * logical plan doubles every iteration even though execution reads
-    * the cache.
+    * the cache. The pinned frame registers with the enclosing scope.
     */
   def pin(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint(true)
+    register(
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+      else df.localCheckpoint(true))
 
   /** Release a pinned (or persisted) frame's storage NOW. Walks the
     * analyzed plan for `LogicalRDD` leaves and unpersists their
@@ -76,6 +129,54 @@ object Pins {
     df.unpersist()
     df.queryExecution.analyzed.foreach {
       case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case _              => ()
+    }
+  }
+
+  /** One scope's registrations. Threads that inherited the scope may
+    * register concurrently; once closed it accepts nothing more, so a
+    * pool thread outliving its scope falls through to the next open
+    * one.
+    */
+  private final class Scope {
+    private var frames = List.empty[DataFrame]
+    private var open = true
+
+    def add(df: DataFrame): Boolean = synchronized {
+      if (open) frames = df :: frames
+      open
+    }
+
+    /** Newest first, so a frame is dropped before the frames it was
+      * built from and the CacheManager never rebuilds a dependant. */
+    def close(): Unit = {
+      val toFree = synchronized { open = false; val fs = frames; frames = Nil; fs }
+      toFree.foreach { df =>
+        try free(df)
+        catch {
+          case scala.util.control.NonFatal(e) =>
+            org.slf4j.LoggerFactory.getLogger(getClass)
+              .warn("Pins.scoped: releasing a registered frame failed", e)
+        }
+      }
+    }
+  }
+
+  private val scopes = new InheritableThreadLocal[List[Scope]] {
+    override def initialValue(): List[Scope] = Nil
+  }
+
+  private def register(df: DataFrame): DataFrame = {
+    scopes.get.exists(_.add(df))
+    df
+  }
+
+  /** Blocking, precise release: the frame's own cache entry, plus its
+    * checkpoint RDD when the frame is a pin (its plan is that leaf). */
+  private def free(df: DataFrame): Unit = {
+    df.unpersist(blocking = true)
+    df.queryExecution.analyzed match {
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking = true)
       case _              => ()
     }
   }

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.operators.Pins
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{functions => F}
@@ -227,7 +228,7 @@ object Ann {
         // hint: |over| is bounded only by bandedRows/cap, so AQE's
         // runtime-size decision (not a hint that bypasses
         // autoBroadcastJoinThreshold) picks broadcast when it is safe
-        val banded = bandedSignatures(df, idCol, vecCol, nPlanes, bands).persist()
+        val banded = Pins.persist(bandedSignatures(df, idCol, vecCol, nPlanes, bands))
         val over = banded.groupBy("band", "key")
           .agg(F.count(F.lit(1)).as("bn")).where(F.col("bn") > cap)
           .select("band", "key")
@@ -236,7 +237,7 @@ object Ann {
           .where(F.col("a.id") < F.col("b.id"))
           .select(F.col("a.id").as("id1"), F.col("b.id").as("id2"))
           .distinct()
-        val out = verified(cands).persist()
+        val out = Pins.persist(verified(cands))
         out.count()
         banded.unpersist()
         out
@@ -442,7 +443,7 @@ object Ann {
   private[similarity] def boundedTrainSample(c: DataFrame, maxTrain: Int,
                                              rowCountHint: Option[Long]): DataFrame = {
     val m = sampleModulus(c, maxTrain, rowCountHint)
-    val trainSet = c
+    val trainSet = Pins.persist(c
       .where(F.pmod(F.xxhash64(F.col("neighbor_id")), F.lit(m)) === 0)
       .orderBy(F.xxhash64(F.col("neighbor_id")), F.col("neighbor_id"))
       .limit(maxTrain)
@@ -450,8 +451,7 @@ object Ann {
       // slice at the design bound) so the distributed consumers (the
       // PCA mean/Gram aggregates) parallelize — the Lloyd trainers
       // collect in total id order, so layout never reaches them
-      .repartition(math.max(1, maxTrain / 25000))
-      .persist()
+      .repartition(math.max(1, maxTrain / 25000)))
     trainSet.count()
     trainSet
   }
@@ -1404,10 +1404,9 @@ object Ann {
     * set into the scan). cellCap applies to the COMBINED cell
     * occupancy, mirroring the inline operator.
     *
-    * The result is returned PERSISTED and already materialized;
-    * callers fully done with it must unpersist() it (as
-    * StreamingDedup.semanticIngest does per micro-batch — the wired
-    * driver harnesses instead clearCache() between queries).
+    * The result is returned PERSISTED and already materialized; the
+    * caller's [[Pins.scoped]] frees it (StreamingDedup.semanticIngest
+    * scopes each micro-batch).
     */
   def semanticIngestPairs(incoming: DataFrame, existing: DataFrame,
                           existingCells: DataFrame,
@@ -1416,7 +1415,7 @@ object Ann {
                           threshold: Double, nProbe: Int,
                           cellCap: Option[Long] = None): DataFrame = {
     val batchCells =
-      semanticCellsWith(incoming, idCol, vecCol, cents, nProbe).persist()
+      Pins.persist(semanticCellsWith(incoming, idCol, vecCol, cents, nProbe))
     val allCells = existingCells.select("id", "cell").unionAll(batchCells)
     var overCap: Option[DataFrame] = None
     val (keptAll, keptBatch) = cellCap match {
@@ -1427,19 +1426,18 @@ object Ann {
         // Persisted (r21, guide §1.2): it anti-joins BOTH kept frames
         // — two plan instances — so unpersisted the full-occupancy
         // aggregate over corpus ∪ batch cells ran twice.
-        val over = allCells.groupBy("cell")
+        val over = Pins.persist(allCells.groupBy("cell")
           .agg(F.count(F.lit(1)).as("cn")).where(F.col("cn") > cap)
-          .select("cell").persist()
+          .select("cell"))
         overCap = Some(over)
         (allCells.join(over, Seq("cell"), "left_anti"),
           batchCells.join(over, Seq("cell"), "left_anti"))
     }
-    val cands = keptBatch.as("a").join(keptAll.as("b"), Seq("cell"))
+    val cands = Pins.persist(keptBatch.as("a").join(keptAll.as("b"), Seq("cell"))
       .where(F.col("a.id") =!= F.col("b.id"))
       .select(F.least(F.col("a.id"), F.col("b.id")).as("id1"),
         F.greatest(F.col("a.id"), F.col("b.id")).as("id2"))
-      .distinct()
-      .persist()
+      .distinct())
     val corpus = existing.select(F.col(idCol).as("__vid"), F.col(vecCol).as("__v"))
       .unionAll(incoming.select(F.col(idCol), F.col(vecCol)))
     val candIds = cands
@@ -1450,16 +1448,15 @@ object Ann {
     // Persisted (r21, guide §1.2): v1 AND v2 below are two plan
     // instances of this frame — unpersisted, the corpus scan +
     // semi-join + dedup ran twice. Candidate-sized by construction.
-    val candVecs = corpus.join(candIds, F.col("__vid") === F.col("__cid"), "left_semi")
-      .dropDuplicates("__vid")
-      .persist()
+    val candVecs = Pins.persist(
+      corpus.join(candIds, F.col("__vid") === F.col("__cid"), "left_semi")
+        .dropDuplicates("__vid"))
     val v1 = candVecs.select(F.col("__vid").as("id1"), F.col("__v").as("v1"))
     val v2 = candVecs.select(F.col("__vid").as("id2"), F.col("__v").as("v2"))
-    val out = cands.join(v1, "id1").join(v2, "id2")
+    val out = Pins.persist(cands.join(v1, "id1").join(v2, "id2")
       .withColumn("sim", cosine(F.col("v1"), F.col("v2")))
       .where(F.col("sim") >= threshold)
-      .select(F.col("id1"), F.col("id2"), F.round(F.col("sim"), 6).as("similarity"))
-      .persist()
+      .select(F.col("id1"), F.col("id2"), F.round(F.col("sim"), 6).as("similarity")))
     out.count()
     batchCells.unpersist()
     cands.unpersist()

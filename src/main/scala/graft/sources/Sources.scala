@@ -51,12 +51,8 @@ object Sources {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).save(path)
   }
 
-  /** Bucketed managed-table write for co-located downstream joins. */
-  def writeBucketed(df: DataFrame, table: String, bucketBy: String,
-                    nBuckets: Int, sortBy: Option[String] = None): Unit =
-    writeBucketedMulti(df, table, Seq(bucketBy), nBuckets, sortBy.toSeq)
-
-  /** Multi-column bucketing: bucket columns should cover the FULL
+  /** Bucketed managed-table write for co-located downstream joins.
+    * The bucket columns should cover the FULL
     * downstream join key — Spark's co-partition check requires all
     * cluster keys by default (spark.sql.requireAllClusterKeysForCoPartition),
     * so a subset-bucketed table still shuffles.

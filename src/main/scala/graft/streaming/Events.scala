@@ -199,8 +199,8 @@ object Events {
              maxGapMinutes: Int = 30): DataFrame = {
     require(steps.size >= 2, "a funnel needs at least two steps")
     val gapUs = maxGapMinutes * 60L * 1000 * 1000
-    val e = events.select(F.col("user_id"), F.col("event_type"),
-      usOf(F.col("ts")).as("us")).persist()
+    val e = graft.operators.Pins.persist(events.select(F.col("user_id"),
+      F.col("event_type"), usOf(F.col("ts")).as("us")))
     val s1 = e.where(F.col("event_type") === steps.head)
       .groupBy("user_id").agg(F.min("us").as("t1_us"))
     val full = steps.zipWithIndex.drop(1).foldLeft(s1) {
@@ -220,9 +220,10 @@ object Events {
     // to raw events) so the k-1 stage scans hit the cached projection
     // exactly once, then release it — long-lived sessions calling
     // funnel() repeatedly must not accumulate cached partitions.
-    // Result is returned PERSISTED; callers fully done with it may
-    // unpersist() (same contract as jaccardPairs/minhashPairs).
-    val out = full.withColumn("steps_completed", completed.cast("int")).persist()
+    // Result is returned PERSISTED; the caller's Pins.scoped frees it
+    // (same contract as jaccardPairs/minhashPairs).
+    val out = graft.operators.Pins.persist(
+      full.withColumn("steps_completed", completed.cast("int")))
     out.count()
     e.unpersist()
     out

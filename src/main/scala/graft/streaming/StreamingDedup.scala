@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.dedup.{Decontaminate, Dedup}
+import graft.operators.Pins
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{functions => F}
@@ -86,32 +87,33 @@ object StreamingDedup {
     val writer = stream.writeStream
     checkpointDir.foreach(writer.option("checkpointLocation", _))
     writer.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      val spark: SparkSession = batch.sparkSession
-      // resolve the tables INSIDE the batch so each micro-batch sees
-      // the files previous batches appended (a frame captured outside
-      // would pin the query start's file listing); exclude this
-      // batch's own ingest_batch — a re-run after a partial append
-      // must not probe its own leftovers
-      val existing = spark.table(corpusTable)
-        .where(F.col("ingest_batch") < batchId)
-        .select(idCol, textCol)
-      val banded = spark.table(indexTable)
-        .where(F.col("ingest_batch") < batchId)
-        .select("id", "band", "key")
-      val pairs = Dedup.incrementalNearDupPairs(batch.toDF(), existing, banded,
-        idCol, textCol, k, numHashes, bands, threshold)
-      sink(pairs, batchId)
-      pairs.unpersist()
-      // probe BEFORE append: a batch must not band-join its own index
-      // rows (its self-pairs already come from the in-memory union)
-      batch.select(F.col(idCol), F.col(textCol))
-        .withColumn("ingest_batch", F.lit(batchId))
-        .write.mode(SaveMode.Append).saveAsTable(corpusTable)
-      graft.sources.Sources.writeBucketedMulti(
-        Dedup.minhashBanded(batch.toDF(), idCol, textCol, k, numHashes, bands)
-          .withColumn("ingest_batch", F.lit(batchId)),
-        indexTable, bucketBy = Seq("band", "key"), nBuckets = nBuckets,
-        sortBy = Seq("band", "key"), mode = SaveMode.Append)
+      Pins.scoped {
+        val spark: SparkSession = batch.sparkSession
+        // resolve the tables INSIDE the batch so each micro-batch sees
+        // the files previous batches appended (a frame captured outside
+        // would pin the query start's file listing); exclude this
+        // batch's own ingest_batch — a re-run after a partial append
+        // must not probe its own leftovers
+        val existing = spark.table(corpusTable)
+          .where(F.col("ingest_batch") < batchId)
+          .select(idCol, textCol)
+        val banded = spark.table(indexTable)
+          .where(F.col("ingest_batch") < batchId)
+          .select("id", "band", "key")
+        val pairs = Dedup.incrementalNearDupPairs(batch.toDF(), existing, banded,
+          idCol, textCol, k, numHashes, bands, threshold)
+        sink(pairs, batchId)
+        // probe BEFORE append: a batch must not band-join its own index
+        // rows (its self-pairs already come from the in-memory union)
+        batch.select(F.col(idCol), F.col(textCol))
+          .withColumn("ingest_batch", F.lit(batchId))
+          .write.mode(SaveMode.Append).saveAsTable(corpusTable)
+        graft.sources.Sources.writeBucketedMulti(
+          Dedup.minhashBanded(batch.toDF(), idCol, textCol, k, numHashes, bands)
+            .withColumn("ingest_batch", F.lit(batchId)),
+          indexTable, bucketBy = Seq("band", "key"), nBuckets = nBuckets,
+          sortBy = Seq("band", "key"), mode = SaveMode.Append)
+      }
     }.start()
   }
 
@@ -153,22 +155,22 @@ object StreamingDedup {
     val writer = stream.writeStream
     checkpointDir.foreach(writer.option("checkpointLocation", _))
     writer.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      val spark: SparkSession = batch.sparkSession
-      val index = spark.table(indexTable)
-        .where(F.col("ingest_batch") < batchId)
-        .select("hash")
-      // pinned: the kept frame feeds the sink, the corpus append, and
-      // the index append — unpinned, the probe would run three times
-      val kept = Dedup.incrementalNewIdx(batch.toDF(), index, idCol, textCol)
-        .persist()
-      kept.count()
-      sink(kept, batchId)
-      kept.select(F.col(idCol), F.col(textCol))
-        .withColumn("ingest_batch", F.lit(batchId))
-        .write.mode(SaveMode.Append).saveAsTable(corpusTable)
-      Dedup.exactHashIndexAppend(kept, textCol, indexTable, batchId, nBuckets)
-      kept.unpersist()
-      ()
+      Pins.scoped {
+        val spark: SparkSession = batch.sparkSession
+        val index = spark.table(indexTable)
+          .where(F.col("ingest_batch") < batchId)
+          .select("hash")
+        // pinned: the kept frame feeds the sink, the corpus append, and
+        // the index append — unpinned, the probe would run three times
+        val kept = Pins.persist(
+          Dedup.incrementalNewIdx(batch.toDF(), index, idCol, textCol))
+        kept.count()
+        sink(kept, batchId)
+        kept.select(F.col(idCol), F.col(textCol))
+          .withColumn("ingest_batch", F.lit(batchId))
+          .write.mode(SaveMode.Append).saveAsTable(corpusTable)
+        Dedup.exactHashIndexAppend(kept, textCol, indexTable, batchId, nBuckets)
+      }
     }.start()
   }
 
@@ -229,26 +231,27 @@ object StreamingDedup {
     val writer = stream.writeStream
     checkpointDir.foreach(writer.option("checkpointLocation", _))
     writer.foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-      val spark: SparkSession = batch.sparkSession
-      val cents = Ann.readCentroids(spark, centroidPath)
-      val existing = spark.table(corpusTable)
-        .where(F.col("ingest_batch") < batchId)
-        .select(idCol, vecCol)
-      val cells = spark.table(cellTable)
-        .where(F.col("ingest_batch") < batchId)
-        .select("id", "cell")
-      val pairs = Ann.semanticIngestPairs(batch.toDF(), existing, cells,
-        cents, idCol, vecCol, threshold, nProbe, cellCap)
-      sink(pairs, batchId)
-      pairs.unpersist()
-      batch.select(F.col(idCol), F.col(vecCol))
-        .withColumn("ingest_batch", F.lit(batchId))
-        .write.mode(SaveMode.Append).saveAsTable(corpusTable)
-      graft.sources.Sources.writeBucketedMulti(
-        Ann.semanticCellsWith(batch.toDF(), idCol, vecCol, cents, nProbe)
-          .withColumn("ingest_batch", F.lit(batchId)),
-        cellTable, bucketBy = Seq("cell"), nBuckets = nBuckets,
-        sortBy = Seq("cell"), mode = SaveMode.Append)
+      Pins.scoped {
+        val spark: SparkSession = batch.sparkSession
+        val cents = Ann.readCentroids(spark, centroidPath)
+        val existing = spark.table(corpusTable)
+          .where(F.col("ingest_batch") < batchId)
+          .select(idCol, vecCol)
+        val cells = spark.table(cellTable)
+          .where(F.col("ingest_batch") < batchId)
+          .select("id", "cell")
+        val pairs = Ann.semanticIngestPairs(batch.toDF(), existing, cells,
+          cents, idCol, vecCol, threshold, nProbe, cellCap)
+        sink(pairs, batchId)
+        batch.select(F.col(idCol), F.col(vecCol))
+          .withColumn("ingest_batch", F.lit(batchId))
+          .write.mode(SaveMode.Append).saveAsTable(corpusTable)
+        graft.sources.Sources.writeBucketedMulti(
+          Ann.semanticCellsWith(batch.toDF(), idCol, vecCol, cents, nProbe)
+            .withColumn("ingest_batch", F.lit(batchId)),
+          cellTable, bucketBy = Seq("cell"), nBuckets = nBuckets,
+          sortBy = Seq("cell"), mode = SaveMode.Append)
+      }
     }.start()
   }
 

@@ -663,13 +663,11 @@ object Curate {
   def leakageFreeSplit(df: DataFrame, idCol: String, pairs: DataFrame,
                        splits: Seq[(String, Double)],
                        salt: Long = 0L,
-                       releaseInput: Boolean = false,
                        smallGraphLimit: Long = graft.dedup.Dedup.SmallGraphEdges): DataFrame = {
     require(splits.nonEmpty, "at least one split")
     require(splits.forall(_._2 > 0), "positive weights")
     require(math.abs(splits.map(_._2).sum - 1.0) < 1e-9, "weights sum to 1")
-    val comp = graft.dedup.Dedup.components(pairs, releaseInput = releaseInput,
-        smallGraphLimit = smallGraphLimit)
+    val comp = graft.dedup.Dedup.components(pairs, smallGraphLimit = smallGraphLimit)
       .withColumnRenamed("id", idCol)
     val key = sampleKey(F.col("group_id"), salt)
     val cuts = splits.map(_._2).scanLeft(0.0)(_ + _).tail
@@ -1111,11 +1109,10 @@ object Curate {
     val spark = docs.sparkSession
     import spark.implicits._
     require(nMerges >= 1, "nMerges >= 1")
-    var words = docs
+    var words = graft.operators.Pins.persist(docs
       .select(F.explode(TextOps.tokens(F.col(textCol))).as("word"))
       .groupBy("word").agg(F.count(F.lit(1)).as("cnt"))
-      .select(bpeInitRepr(F.col("word")).as("repr"), F.col("cnt"))
-      .persist()
+      .select(bpeInitRepr(F.col("word")).as("repr"), F.col("cnt")))
     words.count()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var step = 1
@@ -1130,9 +1127,8 @@ object Curate {
       else {
         val (pair, c) = best.head
         merges += ((step.toLong, pair, pair.replace(" ", ""), c))
-        val next = words
-          .select(bpeApplyMerge(F.col("repr"), pair).as("repr"), F.col("cnt"))
-          .persist()
+        val next = graft.operators.Pins.persist(words
+          .select(bpeApplyMerge(F.col("repr"), pair).as("repr"), F.col("cnt")))
         next.count()
         words.unpersist()
         words = next

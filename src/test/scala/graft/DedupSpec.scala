@@ -53,25 +53,30 @@ class DedupSpec extends SparkSpec {
     assert(!comp.contains(99L), "isolated nodes are not in the pair graph")
   }
 
-  test("components releaseInput drops a cached pair table; output unaffected") {
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id1", "id2").persist()
-    pairs.count()
-    val comp = Dedup.components(pairs, releaseInput = true)
-      .as[(Long, Long)].collect().toMap
+  test("components: a scope releases a cached pair table; output unaffected") {
+    import graft.operators.Pins
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id1", "id2")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val comp = Pins.scoped {
+      Pins.persist(pairs).count()
+      Dedup.components(pairs).as[(Long, Long)].collect().toMap
+    }
     assert(comp(3L) == 1L && comp(11L) == 10L)
     assert(pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-      "terminal consumer must release the input cache")
+      "the scope must release the input cache")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"components left cached frames behind: $leaked")
   }
 
   test("components distributed path: labels survive upstream cache release") {
     // smallGraphLimit = 0 forces the label-propagation path on a small
-    // graph; releaseInput drops the caller's pair cache. The returned
-    // labels must have TRUNCATED lineage (checkpointed), so collecting
-    // them after a full cache purge cannot re-walk the released input.
+    // graph. The returned labels must have TRUNCATED lineage
+    // (checkpointed), so collecting them after a full cache purge
+    // cannot re-walk the released input.
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 7L), (10L, 11L))
       .toDF("id1", "id2").persist()
     pairs.count()
-    val labels = Dedup.components(pairs, releaseInput = true, smallGraphLimit = 0)
+    val labels = Dedup.components(pairs, smallGraphLimit = 0)
     spark.catalog.clearCache() // simulate eviction of every cached frame
     val comp = labels.as[(Long, Long)].collect().toMap
     assert(comp(1L) == 1L && comp(2L) == 1L && comp(3L) == 1L && comp(7L) == 1L)
@@ -325,7 +330,7 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 7L), (10L, 11L))
       .toDF("id1", "id2").persist()
     pairs.count()
-    val labels = Dedup.components(pairs, releaseInput = true, smallGraphLimit = 0)
+    val labels = Dedup.components(pairs, smallGraphLimit = 0)
     spark.catalog.clearCache()
     val comp = labels.as[(Long, Long)].collect().toMap
     assert(comp(7L) == 1L && comp(11L) == 10L)

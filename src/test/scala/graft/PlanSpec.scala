@@ -493,4 +493,34 @@ class PlanSpec extends SparkSpec {
       }
     }
   }
+
+  test("every wired query, run inside Pins.scoped, leaves nothing cached") {
+    // a long-lived session that scopes each query must not accumulate
+    // cached or checkpointed blocks. The only survivors allowed are
+    // the process-level memo frames (capFrames, fixtureCorpus), which
+    // are identified through the memo maps themselves.
+    import graft.operators.Pins
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    def memoRdds: Set[Int] = {
+      val frames = SparkEntry.capFramesCache.values.asScala.toSeq
+        .flatMap(_.productIterator.map(_.asInstanceOf[DataFrame])) ++
+        SparkEntry.fixtureCorpusCache.values.asScala
+      frames.flatMap(_.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id })
+        .toSet
+    }
+    spark.catalog.clearCache()
+    val leaks = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val before = sc.getPersistentRDDs.keySet.toSet
+      Pins.scoped(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+      val rdds = sc.getPersistentRDDs.keySet.toSet -- before -- memoRdds
+      val cached = !spark.sharedState.cacheManager.isEmpty
+      if (cached) spark.catalog.clearCache()
+      if (rdds.nonEmpty || cached) Some(s"$name: new rdds $rdds, cache entries left: $cached")
+      else None
+    }
+    assert(leaks.isEmpty, leaks.mkString("\n"))
+  }
 }

@@ -591,4 +591,15 @@ class RobustnessSpec extends SparkSpec {
       assert(got == a.toSet.intersect(b.toSet).size.toLong, s"case $i")
     }
   }
+
+  test("personalizedPageRank on an empty edge list raises its named require") {
+    import graft.operators.Graph
+    val noEdges = Seq.empty[(String, String, Long)].toDF("src", "dst", "w")
+    val seeds = Seq("a").toDF("node")
+    val e = intercept[IllegalArgumentException] {
+      Graph.personalizedPageRank(noEdges, seeds, iters = 1)
+    }
+    assert(e.getMessage.contains("personalizedPageRank: no seed present in the graph"),
+      e.getMessage)
+  }
 }
